@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.functions.WebMercator
 
 /** The reference's per-feature transform inventory (SURVEY.md §2.2-2.3) as
@@ -18,30 +19,45 @@ object FeatureOps {
     * (reference `/root/reference/task.ts:427`).
     */
   def idNamespace(layerId: String)(df: DataFrame): DataFrame =
-    df.withColumn("id", concat(lit(s"layer-$layerId-"), col("id")))
+    df.withColumn("id", namespacedId(layerId, col("id")))
+
+  def namespacedId(layerId: String, id: Column): Column = concat(lit(s"layer-$layerId-"), id)
 
   /** T2 — property nesting: `properties = {metadata: properties}`
     * (reference `task.ts:429-431`, v5.0.0). Keeps upstream attrs opaque.
     */
   def nestMetadata(df: DataFrame): DataFrame =
-    df.withColumn("properties", struct(col("properties").as("metadata")))
+    df.withColumn("properties", nestedMetadata(col("properties")))
+
+  def nestedMetadata(properties: Column): Column = struct(properties.as("metadata"))
 
   /** P4 — null-geometry drop (reference `task.ts:222,351-353`, v5.8.0). */
   def dropNullGeometry(df: DataFrame): DataFrame =
     df.filter(col("geometry").isNotNull && col("geometry.gtype").isNotNull)
 
-  /** T3 — Multi-geometry explode (reference `task.ts:433-447`, v3.2.0
-    * "UnMulti Multi Geoms"): each part becomes its own feature with id
-    * `"<id>-<idx>"` and `gtype = replace('Multi', '')`; properties
-    * duplicated. Non-multi features pass through unchanged.
-    */
+  /** Coordinate types of the canonical geometry struct ([[graft.Geometry]]). */
+  val PointType: ArrayType = ArrayType(DoubleType)
+  val LinesType: ArrayType = ArrayType(PointType)
+  val RingsType: ArrayType = ArrayType(LinesType)
+  val PolysType: ArrayType = ArrayType(RingsType)
+
   /** Canonical (fully nullable) geometry struct type — branch outputs are
     * cast to it so unions don't trip over NOT NULL nullability mismatches.
     */
-  private val GeomType =
-    "struct<gtype:string,point:array<double>,lines:array<array<double>>," +
-      "rings:array<array<array<double>>>,polys:array<array<array<array<double>>>>>"
+  val GeomType: StructType = StructType(Seq(
+    StructField("gtype", StringType),
+    StructField("point", PointType),
+    StructField("lines", LinesType),
+    StructField("rings", RingsType),
+    StructField("polys", PolysType)))
 
+  /** T3 — Multi-geometry explode (reference `task.ts:433-447`, v3.2.0
+    * "UnMulti Multi Geoms"): each part becomes its own feature with id
+    * `"<id>-<idx>"` and `gtype = replace('Multi', '')`; properties
+    * duplicated. Non-multi features pass through unchanged. For inputs that
+    * may hold Multi parts (FeaturePack's f2); a scan that only yields points
+    * needs no explode (see [[IncomingFlow.features]]).
+    */
   def explodeMulti(df: DataFrame): DataFrame = {
     val passthrough = df.filter(!col("geometry.gtype").startsWith("Multi"))
 
@@ -54,12 +70,12 @@ object FeatureOps {
         point.as("point"),
         lines.as("lines"),
         rings.as("rings"),
-        lit(null).cast("array<array<array<array<double>>>>").as("polys")
+        lit(null).cast(PolysType).as("polys")
       ).cast(GeomType)
 
-    val nullPt = lit(null).cast("array<double>")
-    val nullLn = lit(null).cast("array<array<double>>")
-    val nullRg = lit(null).cast("array<array<array<double>>>")
+    val nullPt = lit(null).cast(PointType)
+    val nullLn = lit(null).cast(LinesType)
+    val nullRg = lit(null).cast(RingsType)
 
     val points = df.filter(col("geometry.gtype") === "MultiPoint")
       .select(col("id"), col("properties"), col("geometry"),

@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, GraftShims, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.KnownNullable
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 import scala.collection.concurrent.TrieMap
 
 /** S7 — the TAK FeatureCollection sink (reference `this.submit(fc)`,
@@ -37,7 +39,14 @@ object IncomingFlow {
   /** Normalized feature frame from an ArcGIS layer: `id` namespaced,
     * dynamic attributes nested under `properties.metadata` (as strings —
     * the schema-less escape hatch, SURVEY.md §1.2), geometry from the
-    * layer's point coordinates.
+    * layer's point coordinates, already in the canonical
+    * [[FeatureOps.GeomType]].
+    *
+    * The normalization chain is one narrow projection over the scan. The
+    * scan yields points only (`geom_x`/`geom_y`), so T3 (Multi explode) is
+    * the identity here and is not planned: the plan is
+    * `Project(Filter(BatchScan))`. [[FeatureOps.explodeMulti]] still runs
+    * for inputs that may hold Multi parts (FeaturePack's f2).
     */
   def features(
       spark: SparkSession,
@@ -49,34 +58,26 @@ object IncomingFlow {
     val scan = where.fold(reader)(w => reader.option("where", w)).load()
 
     val attrCols = scan.columns.filterNot(c => c == "geom_x" || c == "geom_y")
-    val propsMap = map(
-      attrCols.flatMap(c => Seq(lit(c), col(c).cast("string"))).toSeq: _*
+    val metadata = map(
+      attrCols.flatMap(c => Seq(lit(c), col(c).cast(StringType))).toSeq: _*
     )
-    val raw = scan.select(
-      col("objectid").cast("string").as("id"),
-      propsMap.as("properties"),
-      when(
-        col("geom_x").isNotNull,
-        struct(
-          lit("Point").as("gtype"),
-          array(col("geom_x"), col("geom_y")).as("point"),
-          lit(null).cast("array<array<double>>").as("lines"),
-          lit(null).cast("array<array<array<double>>>").as("rings"),
-          lit(null).cast("array<array<array<array<double>>>>").as("polys")
-        )
-      ).as("geometry")
+    // canonical nullability without a per-row cast: the tags only widen the
+    // declared type, the values are computed as written
+    def nullable(c: Column): Column = GraftShims.column(KnownNullable(GraftShims.expression(c)))
+    val geometry = nullable(struct(
+      nullable(lit("Point")).as("gtype"),
+      nullable(array(col("geom_x"), col("geom_y"))).as("point"),
+      lit(null).cast(FeatureOps.LinesType).as("lines"),
+      lit(null).cast(FeatureOps.RingsType).as("rings"),
+      lit(null).cast(FeatureOps.PolysType).as("polys")
+    ))
+    // reference order (task.ts:425-447): drop null geometry (P4), namespace
+    // the id (T1), nest metadata (T2); T3 is the identity on points
+    scan.filter(col("geom_x").isNotNull).select(
+      FeatureOps.namespacedId(layerId, col("objectid").cast(StringType)).as("id"),
+      FeatureOps.nestedMetadata(metadata).as("properties"),
+      geometry.as("geometry")
     )
-    // reference order (task.ts:425-447): drop null geometry, namespace the
-    // id, nest metadata, THEN explode (child ids inherit the namespace)
-    val chain =
-      FeatureOps.explodeMulti(
-        FeatureOps.nestMetadata(
-          FeatureOps.idNamespace(layerId)(
-            FeatureOps.dropNullGeometry(raw)
-          )
-        )
-      )
-    chain
   }
 
   /** Run the full path: normalize → serialize to GeoJSON → submit per
@@ -103,13 +104,13 @@ object IncomingFlow {
             col("geometry.point").as("coordinates")
           ).as("geometry")
         )
-      ).as("feature_json")
-    )
+      )
+    ).as(Encoders.STRING)
     val count = spark.sparkContext.longAccumulator("tak_submitted")
-    json.foreachPartition { (it: Iterator[Row]) =>
+    json.foreachPartition { (it: Iterator[String]) =>
       val client = TakClientRegistry.get(takClientKey)
       it.grouped(500).foreach { batch =>
-        client.submit(batch.map(_.getString(0)))
+        client.submit(batch)
         count.add(batch.size)
       }
     }

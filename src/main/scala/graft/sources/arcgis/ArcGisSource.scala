@@ -581,16 +581,24 @@ class ArcGisScan(
     new ArcGisMicroBatchStream(
       schema, options.asCaseSensitiveMap().asScala.toMap, where)
 
-  /** Layer statistics for the planner: row count from the layer metadata
-    * (one cheap `returnCountOnly` probe, cached in the client) and a field-
-    * width size estimate — enough for Catalyst to pick a broadcast join for
-    * small layers WITHOUT a user hint, and to fall back to shuffle joins
-    * when the layer outgrows the threshold (the 100 TB failure mode a
+  /** The layer's metadata and row count, fetched once per scan and shared by
+    * [[estimateStatistics]] and [[planInputPartitions]] (which the planner
+    * may each call more than once). It is not cached across scans:
+    * `totalCount` sizes the offset pages, and a cache that outlived the scan
+    * would miss rows appended since.
+    */
+  private lazy val info: LayerInfo = ArcGisClientRegistry.get(options.get("client")).layerInfo()
+
+  /** Layer statistics for the planner: row count from the scan's layer info
+    * (one cheap `returnCountOnly` probe, shared with partition planning) and
+    * a field-width size estimate — enough for Catalyst to pick a broadcast
+    * join for small layers WITHOUT a user hint, and to fall back to shuffle
+    * joins when the layer outgrows the threshold (the 100 TB failure mode a
     * hard-coded hint would hit).
     */
   override def estimateStatistics(): Statistics = new Statistics {
     private lazy val total: Long =
-      try ArcGisClientRegistry.get(options.get("client")).layerInfo().totalCount
+      try info.totalCount
       catch { case _: Throwable => -1L }
     private def rowWidth: Long = schema.fields.map { f =>
       f.dataType match {
@@ -647,7 +655,6 @@ class ArcGisScan(
       Array(ArcGisInputPartition(-1, -1, effectiveWhere))
     } else {
       val client = ArcGisClientRegistry.get(clientKey)
-      val info = client.layerInfo()
       val page = Option(options.get("pageSize")).map(_.toInt)
         .getOrElse(info.maxRecordCount.max(1))
       // OID-range mode: explicit opt-in, or forced when the server's /query
@@ -779,31 +786,64 @@ class ArcGisDeletesReader(
   * REST surface (feature attributes and statistics results alike).
   */
 private[arcgis] object ArcGisValues {
-  /** Materialize one REST feature as an InternalRow of `schema` (shared by
-    * the offset-page and OID-range readers).
-    */
-  def toRow(schema: StructType, f: EsriFeature): InternalRow = {
-    val values = schema.fields.map { fld =>
-      fld.name match {
-        case "geom_x" => f.geometry.map(_._1).map(Double.box).orNull
-        case "geom_y" => f.geometry.map(_._2).map(Double.box).orNull
-        case "_deleted" => Boolean.box(false) // live rows; tombstones use their own reader
-        case n =>
-          f.attributes.get(n).map(v => coerce(fld.dataType, v)).orNull
-      }
-    }
-    new GenericInternalRow(values.asInstanceOf[Array[Any]])
-  }
+  def coerce(dataType: DataType, v: Any): Any =
+    if (v == null) null else coercer(dataType)(v)
 
-  def coerce(dataType: DataType, v: Any): Any = (dataType, v) match {
-    case (_, null) => null
-    case (StringType, s) => UTF8String.fromString(s.toString)
-    case (LongType, n: Number) => Long.box(n.longValue())
-    case (IntegerType, n: Number) => Int.box(n.intValue())
-    case (DoubleType, n: Number) => Double.box(n.doubleValue())
-    case (FloatType, n: Number) => Float.box(n.floatValue())
-    case (BooleanType, b: Boolean) => Boolean.box(b)
-    case _ => null
+  /** The non-null attribute value → Catalyst value conversion for one type. */
+  def coercer(dataType: DataType): Any => Any = dataType match {
+    case StringType => v => UTF8String.fromString(v.toString)
+    case LongType => { case n: Number => Long.box(n.longValue()); case _ => null }
+    case IntegerType => { case n: Number => Int.box(n.intValue()); case _ => null }
+    case DoubleType => { case n: Number => Double.box(n.doubleValue()); case _ => null }
+    case FloatType => { case n: Number => Float.box(n.floatValue()); case _ => null }
+    case BooleanType => { case b: Boolean => Boolean.box(b); case _ => null }
+    case _ => _ => null
+  }
+}
+
+/** Materializes REST features as InternalRows of `schema` (shared by the
+  * offset-page and OID-range readers). Each slot's role and coercion are
+  * resolved once per reader, and a page's attribute positions once per
+  * page: features of one reply share their [[AttrKeys]].
+  */
+private[arcgis] final class EsriRowConverter(schema: StructType) {
+  private val names = schema.fieldNames
+  private val coercers = schema.fields.map(f => ArcGisValues.coercer(f.dataType))
+  private val X = -1
+  private val Y = -2
+  private val Deleted = -3
+  private val roles = names.map {
+    case "geom_x" => X
+    case "geom_y" => Y
+    case "_deleted" => Deleted // live rows; tombstones use their own reader
+    case _ => 0 // attribute
+  }
+  private var keys: AttrKeys = _
+  private var slots: Array[Int] = _
+
+  def apply(f: EsriFeature): InternalRow = {
+    val shared = f.attributes match {
+      case a: EsriAttributes =>
+        if (a.attrKeys ne keys) { keys = a.attrKeys; slots = names.map(keys.indexOf) }
+        a
+      case _ => null
+    }
+    val values = new Array[Any](names.length)
+    var j = 0
+    while (j < names.length) {
+      values(j) = roles(j) match {
+        case X => f.geometry.map(g => Double.box(g._1)).orNull
+        case Y => f.geometry.map(g => Double.box(g._2)).orNull
+        case Deleted => Boolean.box(false)
+        case _ =>
+          val v =
+            if (shared != null) { if (slots(j) < 0) null else shared.valueAt(slots(j)) }
+            else f.attributes.getOrElse(names(j), null)
+          if (v == null) null else coercers(j)(v)
+      }
+      j += 1
+    }
+    new GenericInternalRow(values)
   }
 }
 
@@ -863,13 +903,14 @@ class ArcGisPartitionReader(
     page.iterator
   }
 
+  private val toRow = new EsriRowConverter(schema)
   private var current: EsriFeature = _
 
   override def next(): Boolean = {
     if (features.hasNext) { current = features.next(); true } else false
   }
 
-  override def get(): InternalRow = ArcGisValues.toRow(schema, current)
+  override def get(): InternalRow = toRow(current)
 
   override def close(): Unit = ()
 }
@@ -893,6 +934,7 @@ class ArcGisOidRangeReader(
 
   private val pending = scala.collection.mutable.Stack[(Long, Long)]((partition.lo, partition.hi))
   private var buffer: Iterator[EsriFeature] = Iterator.empty
+  private val toRow = new EsriRowConverter(schema)
   private var current: EsriFeature = _
 
   private def rangeWhere(lo: Long, hi: Long): String = {
@@ -926,7 +968,7 @@ class ArcGisOidRangeReader(
   override def next(): Boolean =
     if (buffer.hasNext || refill()) { current = buffer.next(); true } else false
 
-  override def get(): InternalRow = ArcGisValues.toRow(schema, current)
+  override def get(): InternalRow = toRow(current)
 
   override def close(): Unit = ()
 }

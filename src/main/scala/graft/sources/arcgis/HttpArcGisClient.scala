@@ -12,8 +12,10 @@ import java.nio.charset.StandardCharsets
   * reference's token/referer pattern (`task.ts:373-388`) behind an
   * expiry-aware [[AuthCache]] amortized per executor.
   *
-  * Deliberately dependency-free (java.net.http + the minimal JSON
-  * read/write below) since the build is offline. Integration-tested
+  * Deliberately dependency-free (java.net.http + [[MiniJson]]) since the
+  * build is offline. Replies are read as bytes and decoded by MiniJson's
+  * one reader; an HTTP-200 `{"error":…}` reply fails (or re-authenticates
+  * and retries) like the HTTP status it names. Integration-tested
   * against a loopback ArcGIS stub (`HttpArcGisClientSpec` — pagination,
   * pushdown-over-the-wire, token/referer, write envelopes); engine logic
   * above the transport is additionally exercised through
@@ -50,20 +52,26 @@ class HttpArcGisClient(
   /** Transient failures (throttling, server errors, connection resets) are
     * retried with exponential backoff and deterministic jitter — a retried
     * partition must behave identically on a task re-run, so no random
-    * jitter. 401/403 additionally invalidates the cached token so the next
-    * attempt re-authenticates (expiry races). 4xx other than 401/403/429 is
-    * permanent and fails fast.
+    * jitter. Auth failures (HTTP 401/403, and the token codes 498 invalid /
+    * 499 required that ArcGIS sends in an HTTP-200 error envelope)
+    * additionally invalidate the cached token so the next attempt
+    * re-authenticates (expiry races). Other 4xx codes are permanent and fail
+    * fast. An error envelope is judged by its code exactly as an HTTP status
+    * would be, and a failure carries the server's code and message.
     *
     * Writes (`idempotent = false`: addFeatures/updateFeatures) are NOT
     * retried on 5xx or mid-flight I/O loss — the server may have applied the
     * edit before the reply was lost, and a blind re-submit would duplicate
     * features (the reference client never retries writes, `task.ts:239,321`).
-    * Writes still retry the provably-not-applied cases: 401/403/429 (rejected
-    * before the edit ran) and connect-phase failures (the request never
-    * reached the server).
+    * Writes still retry the provably-not-applied cases: auth failures and
+    * 429 (rejected before the edit ran) and connect-phase failures (the
+    * request never reached the server).
     */
+  private def authFailure(code: Int): Boolean =
+    code == 401 || code == 403 || code == 498 || code == 499
+
   private def retryable(code: Int, idempotent: Boolean): Boolean =
-    code == 429 || code == 401 || code == 403 || (idempotent && code >= 500)
+    code == 429 || authFailure(code) || (idempotent && code >= 500)
 
   private def connectPhase(e: java.io.IOException): Boolean = e match {
     case _: java.net.ConnectException => true
@@ -72,29 +80,31 @@ class HttpArcGisClient(
     case _ => false
   }
 
-  private def sendWithRetry(
-      what: String, build: () => HttpRequest, idempotent: Boolean = true): String =
-    sendRaw(what, build, HttpResponse.BodyHandlers.ofString(), idempotent)
-
-  private def sendRaw[T](
-      what: String, build: () => HttpRequest,
-      handler: HttpResponse.BodyHandler[T], idempotent: Boolean): T = {
+  /** Send with the retry policy above; `decode` reads the response body and
+    * raises [[ArcGisErrorEnvelope]] on an error reply.
+    */
+  private def send[T](what: String, build: () => HttpRequest, idempotent: Boolean)(
+      decode: Array[Byte] => T): T = {
     var attempt = 1
     while (true) {
-      val outcome =
-        try Right(http.send(build(), handler))
-        catch { case e: java.io.IOException => Left(e) }
-      outcome match {
-        case Right(r) if r.statusCode() < 400 => return r.body()
-        case Right(r) =>
-          if (r.statusCode() == 401 || r.statusCode() == 403) auth.foreach(_.invalidate())
-          if (!retryable(r.statusCode(), idempotent) || attempt >= maxAttempts)
-            throw new RuntimeException(
-              s"ArcGIS $what failed: HTTP ${r.statusCode()} after $attempt attempt(s)")
-        case Left(e) =>
-          if ((!idempotent && !connectPhase(e)) || attempt >= maxAttempts)
-            throw new RuntimeException(
-              s"ArcGIS $what failed after $attempt attempt(s): ${e.getMessage}", e)
+      val rejected: (Int, String) =
+        try {
+          val r = http.send(build(), HttpResponse.BodyHandlers.ofByteArray())
+          if (r.statusCode() < 400) return decode(r.body())
+          (r.statusCode(), s"HTTP ${r.statusCode()}")
+        } catch {
+          case e: ArcGisErrorEnvelope => (e.code, e.getMessage)
+          case e: java.io.IOException =>
+            if ((!idempotent && !connectPhase(e)) || attempt >= maxAttempts)
+              throw new RuntimeException(
+                s"ArcGIS $what failed after $attempt attempt(s): ${e.getMessage}", e)
+            null
+        }
+      if (rejected != null) {
+        val (code, failure) = rejected
+        if (authFailure(code)) auth.foreach(_.invalidate())
+        if (!retryable(code, idempotent) || attempt >= maxAttempts)
+          throw new RuntimeException(s"ArcGIS $what failed: $failure after $attempt attempt(s)")
       }
       sleep(backoffMs * (1L << (attempt - 1)) + (attempt * 37) % math.max(backoffMs, 1))
       attempt += 1
@@ -133,25 +143,25 @@ class HttpArcGisClient(
     */
   private val maxGetQueryChars = 2000
 
-  private def get(path: String, params: Seq[(String, String)]): String =
+  private def get[T](path: String, params: Seq[(String, String)])(decode: Array[Byte] => T): T =
     if (readQs(params).length <= maxGetQueryChars)
-      sendWithRetry(s"GET $path", () => {
+      send(s"GET $path", () => {
         val builder =
           HttpRequest.newBuilder(URI.create(s"$layerUrl$path?${readQs(params)}")).GET()
         referer.foreach(r => builder.header("Referer", r))
         builder.build()
-      })
+      }, idempotent = true)(decode)
     else
-      sendWithRetry(s"POST(read) $path", () => {
+      send(s"POST(read) $path", () => {
         val builder = HttpRequest.newBuilder(URI.create(s"$layerUrl$path"))
           .header("Content-Type", "application/x-www-form-urlencoded")
           .POST(HttpRequest.BodyPublishers.ofString(readQs(params)))
         referer.foreach(r => builder.header("Referer", r))
         builder.build()
-      })
+      }, idempotent = true)(decode)
 
-  private def post(path: String, params: Seq[(String, String)]): String =
-    sendWithRetry(s"POST $path", idempotent = false, build = () => {
+  private def post[T](path: String, params: Seq[(String, String)])(decode: Array[Byte] => T): T =
+    send(s"POST $path", () => {
       val body = (withAuth(params) :+ ("f" -> "json"))
         .map { case (k, v) => s"${enc(k)}=${enc(v)}" }.mkString("&")
       val builder = HttpRequest.newBuilder(URI.create(s"$layerUrl$path"))
@@ -159,14 +169,14 @@ class HttpArcGisClient(
         .POST(HttpRequest.BodyPublishers.ofString(body))
       referer.foreach(r => builder.header("Referer", r))
       builder.build()
-    })
+    }, idempotent = false)(decode)
 
   override def layerInfo(): LayerInfo = {
-    val json = MiniJson.parse(get("", Seq.empty))
+    val json = get("", Seq.empty)(MiniJson.reply)
     val fields = json.arr("fields").map { f =>
       ArcGisField(f.str("name"), f.str("type"))
     }
-    val count = MiniJson.parse(get("/query", Seq("where" -> "1=1", "returnCountOnly" -> "true")))
+    val count = get("/query", Seq("where" -> "1=1", "returnCountOnly" -> "true"))(MiniJson.reply)
     LayerInfo(
       fields,
       json.num("maxRecordCount").map(_.toInt).getOrElse(1000),
@@ -180,16 +190,6 @@ class HttpArcGisClient(
         .getOrElse(false)
     )
   }
-
-  private def parseFeatures(body: String): Seq[EsriFeature] =
-    MiniJson.parse(body).arr("features").map { f =>
-      val attrs = f.obj("attributes").map(_.fields).getOrElse(Map.empty)
-      val geom = for {
-        g <- f.obj("geometry")
-        x <- g.num("x"); y <- g.num("y")
-      } yield (x, y)
-      EsriFeature(attrs.collect { case (k, v: Any) => k -> v }, geom)
-    }
 
   /** `count < 0` = no explicit cap: the OID-range scan omits BOTH pagination
     * parameters (they require `supportsPagination`, which is exactly what
@@ -215,7 +215,7 @@ class HttpArcGisClient(
     // envelope internally) — the SR discipline is preserved, just in the
     // caller's frame instead of WGS-84
     val sr = outSR.getOrElse("4326")
-    parseFeatures(get("/query", Seq(
+    get("/query", Seq(
       "where" -> where,
       "outFields" -> (if (outFields.isEmpty) "*" else outFields.mkString(",")),
       "outSR" -> sr
@@ -229,28 +229,28 @@ class HttpArcGisClient(
         "geometryType" -> "esriGeometryEnvelope",
         "spatialRel" -> "esriSpatialRelIntersects",
         "inSR" -> sr // same SR as outSR — one unit system end to end
-      ))))
+      )))(MiniJson.features)
   }
 
   override def queryTopFeatures(
       topCount: Int, groupByField: String, orderByField: String,
       where: String, outFields: Seq[String], outSR: Option[String] = None
   ): Seq[EsriFeature] =
-    parseFeatures(get("/queryTopFeatures", Seq(
+    get("/queryTopFeatures", Seq(
       "where" -> where,
       "outFields" -> (if (outFields.isEmpty) "*" else outFields.mkString(",")),
       "outSR" -> outSR.getOrElse("4326"), // same SR discipline as queryPage
       "topFilter" -> s"""{"groupByFields":"$groupByField","topCount":$topCount,"orderByFields":"$orderByField"}"""
-    )))
+    ))(MiniJson.features)
 
   override def queryByKey(keyCol: String, key: String): Seq[EsriFeature] =
-    parseFeatures(get("/query", Seq(
+    get("/query", Seq(
       "where" -> s"$keyCol = '${key.replace("'", "''")}'",
       "outFields" -> "*"
-    )))
+    ))(MiniJson.features)
 
   override def attachmentInfos(oid: Long): Seq[AttachmentInfo] =
-    MiniJson.parse(get(s"/$oid/attachments", Seq.empty)).arr("attachmentInfos").map { a =>
+    get(s"/$oid/attachments", Seq.empty)(MiniJson.reply).arr("attachmentInfos").map { a =>
       AttachmentInfo(
         a.num("id").map(_.toLong).getOrElse(-1L),
         a.str("name"),
@@ -267,10 +267,10 @@ class HttpArcGisClient(
     */
   override def queryAttachments(oids: Seq[Long]): Seq[(Long, AttachmentInfo)] =
     if (oids.isEmpty) Seq.empty
-    else MiniJson.parse(get("/queryAttachments", Seq(
+    else get("/queryAttachments", Seq(
       "objectIds" -> oids.mkString(","),
       "returnUrl" -> "false"
-    ))).arr("attachmentGroups").flatMap { g =>
+    ))(MiniJson.reply).arr("attachmentGroups").flatMap { g =>
       val parent = g.num("parentObjectId").map(_.toLong).getOrElse(-1L)
       g.arr("attachmentInfos").map { a =>
         parent -> AttachmentInfo(
@@ -285,8 +285,8 @@ class HttpArcGisClient(
     * the response body IS the file. Auth/extras still apply; idempotent GET
     * retries as usual.
     */
-  override def attachment(oid: Long, attachmentId: Long): Array[Byte] = {
-    val bytes = sendRaw(
+  override def attachment(oid: Long, attachmentId: Long): Array[Byte] =
+    send(
       s"GET /$oid/attachments/$attachmentId",
       () => {
         val qs = withAuth(withExtras(Seq.empty))
@@ -298,57 +298,43 @@ class HttpArcGisClient(
         referer.foreach(r => builder.header("Referer", r))
         builder.build()
       },
-      HttpResponse.BodyHandlers.ofByteArray(),
-      idempotent = true)
-    sniffErrorEnvelope(bytes, s"attachment $oid/$attachmentId")
-    bytes
-  }
+      idempotent = true)(payload)
 
   /** ArcGIS servers commonly report download failures (expired/invalid
     * token, bad attachment id) as HTTP 200 with a JSON `{"error":...}`
     * envelope. Returning that body as the payload would silently feed
-    * corrupt bytes to the binary operators, so sniff and throw instead —
-    * invalidating the cached token on auth codes (498 invalid token, 499
-    * token required) so the next task attempt re-authenticates. The gate is
+    * corrupt bytes to the binary operators, so it raises like any other
+    * error reply (a token code re-authenticates and retries). The gate is
     * conservative: bytes must start with '{' (after whitespace), be small
     * enough to plausibly be an envelope, parse as JSON, AND carry an
     * `error` object — a real binary attachment never trips all four.
     */
-  private def sniffErrorEnvelope(bytes: Array[Byte], what: String): Unit = {
+  private def payload(bytes: Array[Byte]): Array[Byte] = {
     var i = 0
     while (i < bytes.length && Character.isWhitespace(bytes(i).toChar)) i += 1
-    if (i >= bytes.length || bytes(i) != '{' || bytes.length > 65536) return
-    val parsed =
-      try Some(MiniJson.parse(new String(bytes, StandardCharsets.UTF_8)))
-      catch { case _: RuntimeException => None } // not JSON → a real payload
-    parsed.flatMap(_.obj("error")).foreach { e =>
-      val code = e.num("code").map(_.toInt).getOrElse(-1)
-      if (code == 498 || code == 499 || code == 401 || code == 403)
-        auth.foreach(_.invalidate())
-      throw new RuntimeException(
-        s"ArcGIS $what failed: server returned an error envelope " +
-          s"(code=$code, message='${e.str("message")}') instead of the payload")
+    if (i < bytes.length && bytes(i) == '{' && bytes.length <= 65536) {
+      val parsed =
+        try Some(MiniJson.parse(bytes))
+        catch { case _: RuntimeException => None } // not JSON → a real payload
+      parsed.foreach(MiniJson.checkReply)
     }
+    bytes
   }
 
-  private def writeResults(body: String, resultKey: String): Seq[Either[String, Long]] =
-    MiniJson.parse(body).arr(resultKey).map { r =>
+  private def writeResults(resultKey: String)(body: Array[Byte]): Seq[Either[String, Long]] =
+    MiniJson.reply(body).arr(resultKey).map { r =>
       if (r.bool("success").contains(true))
         Right(r.num("objectId").map(_.toLong).getOrElse(-1L))
       else Left(r.obj("error").flatMap(_.strOpt("description")).getOrElse("unknown error"))
     }
 
   override def addFeatures(feats: Seq[EsriFeature]): Seq[Either[String, Long]] =
-    writeResults(
-      post("/addFeatures", Seq("features" -> MiniJson.featuresJson(feats))),
-      "addResults"
-    )
+    post("/addFeatures", Seq("features" -> MiniJson.featuresJson(feats)))(
+      writeResults("addResults"))
 
   override def updateFeatures(feats: Seq[EsriFeature]): Seq[Either[String, Long]] =
-    writeResults(
-      post("/updateFeatures", Seq("features" -> MiniJson.featuresJson(feats))),
-      "updateResults"
-    )
+    post("/updateFeatures", Seq("features" -> MiniJson.featuresJson(feats)))(
+      writeResults("updateResults"))
 
   override def queryStatistics(
       where: String, groupBy: Seq[String], stats: Seq[StatSpec]
@@ -362,134 +348,6 @@ class HttpArcGisClient(
       "outStatistics" -> outStats,
       "returnGeometry" -> "false"
     ) ++ (if (groupBy.nonEmpty) Seq("groupByFieldsForStatistics" -> groupBy.mkString(",")) else Seq.empty)
-    MiniJson.parse(get("/query", params)).arr("features").map { f =>
-      f.obj("attributes").map(_.fields).getOrElse(Map.empty)
-        .collect { case (k, v: Any) => k -> v }
-    }
-  }
-}
-
-/** Minimal JSON reader/writer for the ArcGIS REST envelope — enough for
-  * fields/features/results; avoids any external dependency (offline build).
-  */
-private[graft] object MiniJson {
-  final case class JValue(value: Any) {
-    def fields: Map[String, Any] = value match {
-      case m: Map[_, _] => m.asInstanceOf[Map[String, Any]]
-      case _ => Map.empty
-    }
-    def obj(k: String): Option[JValue] =
-      fields.get(k).collect { case m: Map[_, _] => JValue(m) }
-    def arr(k: String): Seq[JValue] = fields.get(k) match {
-      case Some(s: Seq[_]) => s.map(JValue(_))
-      case _ => Seq.empty
-    }
-    def str(k: String): String = fields.get(k).map(_.toString).getOrElse("")
-    def strOpt(k: String): Option[String] = fields.get(k).map(_.toString)
-    def num(k: String): Option[Double] = fields.get(k).collect {
-      case d: Double => d
-      case l: Long => l.toDouble
-      case i: Int => i.toDouble
-    }
-    def bool(k: String): Option[Boolean] = fields.get(k).collect { case b: Boolean => b }
-  }
-
-  def parse(s: String): JValue =
-    try JValue(new Parser(s).parseValue())
-    catch {
-      case e: RuntimeException =>
-        throw new RuntimeException(
-          s"malformed ArcGIS JSON response (${e.getClass.getSimpleName}): ${s.take(120)}", e)
-    }
-
-  /** Serialize features to the ESRI JSON array `addFeatures` expects. */
-  def featuresJson(feats: Seq[EsriFeature]): String =
-    feats.map { f =>
-      val attrs = f.attributes.map { case (k, v) =>
-        val jv = v match {
-          case s: String => "\"" + escape(s) + "\""
-          case other => other.toString
-        }
-        "\"" + escape(k) + "\":" + jv
-      }.mkString(",")
-      val geom = f.geometry
-        .map { case (x, y) => s""","geometry":{"x":$x,"y":$y,"spatialReference":{"wkid":102100}}""" }
-        .getOrElse("")
-      s"""{"attributes":{$attrs}$geom}"""
-    }.mkString("[", ",", "]")
-
-  private def escape(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
-  private final class Parser(s: String) {
-    private var i = 0
-    private def ws(): Unit = while (i < s.length && s.charAt(i).isWhitespace) i += 1
-    private def expect(c: Char): Unit = { ws(); require(s.charAt(i) == c, s"expected $c at $i"); i += 1 }
-
-    def parseValue(): Any = {
-      ws()
-      s.charAt(i) match {
-        case '{' => parseObj()
-        case '[' => parseArr()
-        case '"' => parseStr()
-        case 't' => i += 4; true
-        case 'f' => i += 5; false
-        case 'n' => i += 4; null
-        case _ => parseNum()
-      }
-    }
-    private def parseObj(): Map[String, Any] = {
-      expect('{'); ws()
-      if (s.charAt(i) == '}') { i += 1; return Map.empty }
-      val b = Map.newBuilder[String, Any]
-      var done = false
-      while (!done) {
-        ws(); val k = parseStr(); expect(':'); b += (k -> parseValue()); ws()
-        if (s.charAt(i) == ',') i += 1 else { expect('}'); done = true }
-      }
-      b.result()
-    }
-    private def parseArr(): Seq[Any] = {
-      expect('['); ws()
-      if (s.charAt(i) == ']') { i += 1; return Seq.empty }
-      val b = Seq.newBuilder[Any]
-      var done = false
-      while (!done) {
-        b += parseValue(); ws()
-        if (s.charAt(i) == ',') i += 1 else { expect(']'); done = true }
-      }
-      b.result()
-    }
-    private def parseStr(): String = {
-      expect('"')
-      val sb = new StringBuilder
-      while (s.charAt(i) != '"') {
-        val c = s.charAt(i)
-        if (c == '\\') {
-          i += 1
-          s.charAt(i) match {
-            case 'n' => sb.append('\n'); case 't' => sb.append('\t')
-            case 'r' => sb.append('\r'); case 'b' => sb.append('\b')
-            case 'f' => sb.append('\f')
-            case 'u' => sb.append(Integer.parseInt(s.substring(i + 1, i + 5), 16).toChar); i += 4
-            case other => sb.append(other)
-          }
-        } else sb.append(c)
-        i += 1
-      }
-      i += 1
-      sb.toString
-    }
-    private def parseNum(): Any = {
-      val start = i
-      while (i < s.length && "+-0123456789.eE".indexOf(s.charAt(i)) >= 0) i += 1
-      val t = s.substring(start, i)
-      if (t.exists(c => c == '.' || c == 'e' || c == 'E')) t.toDouble else t.toLong
-    }
+    get("/query", params)(MiniJson.features).map(_.attributes)
   }
 }

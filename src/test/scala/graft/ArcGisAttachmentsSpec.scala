@@ -1,12 +1,10 @@
 package graft
 
-import java.net.InetSocketAddress
-import java.net.URLDecoder
-import java.nio.charset.StandardCharsets
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.arcgis._
+import ArcGisLoopback.{params, reply}
 
 /** `attachments=true` scan (VERDICT r17 item 7): the public REST surface's
   * `{layer}/{oid}/attachments` listing + download endpoints exposed as a
@@ -37,22 +35,9 @@ class ArcGisAttachmentsSpec extends AnyFunSuite {
     val downloads = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val downloadParams = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 
-    def params(ex: HttpExchange): Map[String, String] = {
-      val raw = Option(ex.getRequestURI.getRawQuery).getOrElse("")
-      raw.split("&").filter(_.contains("=")).map { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        URLDecoder.decode(k, "UTF-8") -> URLDecoder.decode(v, "UTF-8")
-      }.toMap
-    }
-    def reply(ex: HttpExchange, body: String): Unit = {
-      val bytes = body.getBytes(StandardCharsets.UTF_8)
-      ex.sendResponseHeaders(200, bytes.length)
-      ex.getResponseBody.write(bytes)
-      ex.close()
-    }
     val oids = Seq(1L, 2L, 3L)
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
-    server.createContext("/alayer", (ex: HttpExchange) => {
+    val server = new ArcGisLoopback
+    server.route("/alayer", (ex: HttpExchange) => {
       val p = params(ex)
       val path = ex.getRequestURI.getPath
       val att = "/alayer/(\\d+)/attachments$".r.findFirstMatchIn(path)
@@ -91,9 +76,8 @@ class ArcGisAttachmentsSpec extends AnyFunSuite {
         case other => reply(ex, s"""{"error":"unexpected path $other"}""")
       }
     })
-    server.start()
     try {
-      val base = s"http://127.0.0.1:${server.getAddress.getPort}/alayer"
+      val base = s"${server.base}/alayer"
       ArcGisClientRegistry.register("attach-http",
         new HttpArcGisClient(base, extraParams = Seq("gdbVersion" -> "v1")))
       val df = spark.read.format("arcgis")
@@ -118,7 +102,7 @@ class ArcGisAttachmentsSpec extends AnyFunSuite {
       // ARCGIS_PARAMS merge rides the download URL too
       assert(downloadParams.asIterator().hasNext &&
         downloadParams.peek().contains("gdbVersion=v1"))
-    } finally server.stop(0)
+    } finally server.stop()
   }
 
   private implicit class QueueOps[T](q: java.util.concurrent.ConcurrentLinkedQueue[T]) {
@@ -285,24 +269,11 @@ class ArcGisAttachmentsSpec extends AnyFunSuite {
     val perOidCalls = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     @volatile var advertiseBulk = false
 
-    def params(ex: HttpExchange): Map[String, String] = {
-      val raw = Option(ex.getRequestURI.getRawQuery).getOrElse("")
-      raw.split("&").filter(_.contains("=")).map { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        URLDecoder.decode(k, "UTF-8") -> URLDecoder.decode(v, "UTF-8")
-      }.toMap
-    }
-    def reply(ex: HttpExchange, body: String): Unit = {
-      val bytes = body.getBytes(StandardCharsets.UTF_8)
-      ex.sendResponseHeaders(200, bytes.length)
-      ex.getResponseBody.write(bytes)
-      ex.close()
-    }
     def infoJson(o: Long, id: Long): String =
       s"""{"id":$id,"name":"att-$o-$id.bin","contentType":"application/octet-stream","size":${payloads((o, id)).length}}"""
     val oids = Seq(1L, 2L, 3L)
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
-    server.createContext("/blayer", (ex: HttpExchange) => {
+    val server = new ArcGisLoopback
+    server.route("/blayer", (ex: HttpExchange) => {
       val p = params(ex)
       val path = ex.getRequestURI.getPath
       val att = "/blayer/(\\d+)/attachments$".r.findFirstMatchIn(path)
@@ -350,9 +321,8 @@ class ArcGisAttachmentsSpec extends AnyFunSuite {
         case other => reply(ex, s"""{"error":{"code":400,"message":"unexpected path $other"}}""")
       }
     })
-    server.start()
     try {
-      val base = s"http://127.0.0.1:${server.getAddress.getPort}/blayer"
+      val base = s"${server.base}/blayer"
       ArcGisClientRegistry.register("attach-http-bulk", new HttpArcGisClient(base))
       def scan(): Seq[(Long, Long, String, Long, Seq[Byte])] =
         spark.read.format("arcgis")
@@ -380,21 +350,16 @@ class ArcGisAttachmentsSpec extends AnyFunSuite {
         "the advertised bulk path must issue zero per-OID listings")
       val listed = bulkCalls.peek().split(",").map(_.toLong).sorted.toSeq
       assert(listed == oids, s"the bulk request must cover the window's OIDs, got $listed")
-    } finally server.stop(0)
+    } finally server.stop()
   }
 
   // ------------------------------------------- error envelope on download (r19)
   test("HTTP-200 error envelope on a download is detected, not ingested as payload") {
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
-    server.createContext("/elayer", (ex: HttpExchange) => {
+    val server = new ArcGisLoopback
+    server.route("/elayer", (ex: HttpExchange) => {
       val p = Option(ex.getRequestURI.getRawQuery).getOrElse("")
       val path = ex.getRequestURI.getPath
-      def reply(body: String): Unit = {
-        val bytes = body.getBytes(StandardCharsets.UTF_8)
-        ex.sendResponseHeaders(200, bytes.length)
-        ex.getResponseBody.write(bytes)
-        ex.close()
-      }
+      def reply(body: String): Unit = ArcGisLoopback.reply(ex, body)
       if ("/elayer/\\d+/attachments/\\d+$".r.findFirstIn(path).isDefined)
         // the ArcGIS failure mode under test: HTTP 200, JSON error body
         reply("""{"error":{"code":498,"message":"Invalid token","details":[]}}""")
@@ -409,9 +374,8 @@ class ArcGisAttachmentsSpec extends AnyFunSuite {
         case _ => reply("""{"features":[{"attributes":{"objectid":1}}]}""")
       }
     })
-    server.start()
     try {
-      val base = s"http://127.0.0.1:${server.getAddress.getPort}/elayer"
+      val base = s"${server.base}/elayer"
       ArcGisClientRegistry.register("attach-errenv", new HttpArcGisClient(base))
       val df = spark.read.format("arcgis")
         .option("client", "attach-errenv").option("attachments", "true").load()
@@ -424,7 +388,7 @@ class ArcGisAttachmentsSpec extends AnyFunSuite {
         Option(t).toSeq.flatMap(e => Option(e.getMessage).toSeq ++ messages(e.getCause))
       assert(messages(ex).exists(m => m.contains("error envelope") && m.contains("498")),
         s"expected the code-498 envelope error, got: ${messages(ex)}")
-    } finally server.stop(0)
+    } finally server.stop()
   }
 
   // ---------------------------------------------- planning diagnostics (r19)

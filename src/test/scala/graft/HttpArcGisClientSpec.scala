@@ -1,12 +1,10 @@
 package graft
 
-import java.net.InetSocketAddress
-import java.net.URLDecoder
-import java.nio.charset.StandardCharsets
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.arcgis._
+import ArcGisLoopback.{params, reply}
 
 /** Integration test for the REAL HTTP transport ([[HttpArcGisClient]]):
   * a JDK HttpServer plays a minimal ArcGIS Feature Server on 127.0.0.1
@@ -25,32 +23,14 @@ class HttpArcGisClientSpec extends AnyFunSuite {
          |"geometry":{"x":${id * 1.0},"y":${-id * 1.0}}}""".stripMargin.replace("\n", "")
   }
 
-  private def params(ex: HttpExchange): Map[String, String] = {
-    val raw = Option(ex.getRequestURI.getRawQuery).getOrElse("") match {
-      case "" => new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-      case q  => q
-    }
-    raw.split("&").filter(_.contains("=")).map { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      URLDecoder.decode(k, "UTF-8") -> URLDecoder.decode(v, "UTF-8")
-    }.toMap
-  }
-
-  private def reply(ex: HttpExchange, body: String): Unit = {
-    val bytes = body.getBytes(StandardCharsets.UTF_8)
-    ex.sendResponseHeaders(200, bytes.length)
-    ex.getResponseBody.write(bytes)
-    ex.close()
-  }
-
   test("DSv2 scan, pushdown, auth and writes run through real HTTP") {
     val seenTokens = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val seenReferers = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val seenWheres = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val seenOutSrs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
-    server.createContext("/layer", (ex: HttpExchange) => {
+    val server = new ArcGisLoopback
+    server.route("/layer", (ex: HttpExchange) => {
       val p = params(ex)
       p.get("token").foreach(seenTokens.add)
       Option(ex.getRequestHeaders.getFirst("Referer")).foreach(seenReferers.add)
@@ -100,9 +80,8 @@ class HttpArcGisClientSpec extends AnyFunSuite {
           ex.sendResponseHeaders(404, -1); ex.close()
       }
     })
-    server.start()
     try {
-      val base = s"http://127.0.0.1:${server.getAddress.getPort}/layer"
+      val base = s"${server.base}/layer"
       val auth = new AuthCache(() => ("tok-42", System.currentTimeMillis() + 3600000L))
       val client = new HttpArcGisClient(base, auth = Some(auth), referer = Some("graft-test"))
       ArcGisClientRegistry.register("http-it", client)
@@ -163,15 +142,15 @@ class HttpArcGisClientSpec extends AnyFunSuite {
       assert(client.addFeatures(feats) == Seq(Right(101L), Left("dup key")))
       assert(client.updateFeatures(feats) == Seq(Right(55L)))
     } finally {
-      server.stop(0)
+      server.stop()
     }
   }
 
   test("non-paginating server over real HTTP: OID-range fallback, no pagination params ever sent") {
     val N2 = 37
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    val server = new ArcGisLoopback
     val badParams = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    server.createContext("/np", (ex: HttpExchange) => {
+    server.route("/np", (ex: HttpExchange) => {
       val p = params(ex)
       ex.getRequestURI.getPath match {
         case "/np" =>
@@ -204,9 +183,8 @@ class HttpArcGisClientSpec extends AnyFunSuite {
         case _ => ex.sendResponseHeaders(404, -1); ex.close()
       }
     })
-    server.start()
     try {
-      val base = s"http://127.0.0.1:${server.getAddress.getPort}/np"
+      val base = s"${server.base}/np"
       ArcGisClientRegistry.register("http-np", new HttpArcGisClient(base))
       val df = spark.read.format("arcgis").option("client", "http-np").load()
       val ids = df.select("objectid").collect().map(_.getLong(0)).sorted
@@ -214,31 +192,30 @@ class HttpArcGisClientSpec extends AnyFunSuite {
       assert(ids.toSeq == (0L until N2.toLong), ids.toSeq.toString)
       assert(badParams.isEmpty, s"pagination params sent to a non-paginating server: $badParams")
     } finally {
-      server.stop(0)
+      server.stop()
     }
   }
 
   test("transient 503s are retried with backoff; permanent 400 fails fast; 401 re-auths") {
     val hits = new java.util.concurrent.atomic.AtomicInteger(0)
     val tokens = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    val server = new ArcGisLoopback
     val ok = """{"features":[{"attributes":{"objectid":7},"geometry":{"x":1.0,"y":2.0}}]}"""
-    server.createContext("/flaky", (ex: HttpExchange) => {
+    server.route("/flaky", (ex: HttpExchange) => {
       val n = hits.incrementAndGet()
       if (n <= 2) { ex.sendResponseHeaders(503, -1); ex.close() }
       else reply(ex, ok)
     })
-    server.createContext("/bad", (ex: HttpExchange) => {
+    server.route("/bad", (ex: HttpExchange) => {
       hits.incrementAndGet(); ex.sendResponseHeaders(400, -1); ex.close()
     })
-    server.createContext("/guarded", (ex: HttpExchange) => {
+    server.route("/guarded", (ex: HttpExchange) => {
       val p = params(ex)
       p.get("token").foreach(tokens.add)
       if (p.get("token").contains("tok-1")) { ex.sendResponseHeaders(401, -1); ex.close() }
       else reply(ex, ok)
     })
-    server.start()
-    val base = s"http://127.0.0.1:${server.getAddress.getPort}"
+    val base = server.base
     val slept = scala.collection.mutable.ArrayBuffer.empty[Long]
     try {
       // 503 x2 then success: exactly 3 requests, exponential backoff recorded
@@ -261,7 +238,7 @@ class HttpArcGisClientSpec extends AnyFunSuite {
       // ran) IS still retried
       hits.set(0); slept.clear()
       val feats = Seq(EsriFeature(Map("k" -> "v"), None))
-      server.createContext("/w500/addFeatures", (ex: HttpExchange) => {
+      server.route("/w500/addFeatures", (ex: HttpExchange) => {
         hits.incrementAndGet(); ex.sendResponseHeaders(500, -1); ex.close()
       })
       val w500 = new HttpArcGisClient(s"$base/w500", maxAttempts = 4,
@@ -270,7 +247,7 @@ class HttpArcGisClientSpec extends AnyFunSuite {
       assert(we.getMessage.contains("HTTP 500") && hits.get() == 1 && slept.isEmpty)
 
       hits.set(0)
-      server.createContext("/w429/addFeatures", (ex: HttpExchange) => {
+      server.route("/w429/addFeatures", (ex: HttpExchange) => {
         if (hits.incrementAndGet() == 1) { ex.sendResponseHeaders(429, -1); ex.close() }
         else reply(ex, """{"addResults":[{"objectId":9,"success":true}]}""")
       })
@@ -288,14 +265,14 @@ class HttpArcGisClientSpec extends AnyFunSuite {
       assert(guarded.queryByKey("objectid", "7").nonEmpty)
       assert(tokens.toArray.map(_.toString).toSeq == Seq("tok-1", "tok-2"))
     } finally {
-      server.stop(0)
+      server.stop()
     }
   }
 
   test("PortalAuth.fetcher: generateToken exchange feeds the cache; error envelope surfaces") {
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    val server = new ArcGisLoopback
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[Map[String, String]]()
-    server.createContext("/tokens/generateToken", (ex: HttpExchange) => {
+    server.route("/tokens/generateToken", (ex: HttpExchange) => {
       val p = params(ex)
       seen.add(p)
       if (p.get("password").contains("right"))
@@ -303,9 +280,8 @@ class HttpArcGisClientSpec extends AnyFunSuite {
       else
         reply(ex, """{"error":{"code":400,"message":"Unable to generate token."}}""")
     })
-    server.start()
     try {
-      val base = s"http://127.0.0.1:${server.getAddress.getPort}/tokens/generateToken"
+      val base = s"${server.base}/tokens/generateToken"
       val good = graft.sources.arcgis.PortalAuth.fetcher(base, "alice", "right", "graft")()
       assert(good == (("T-9", 1234567890123L)))
       val p = seen.toArray.head.asInstanceOf[Map[String, String]]
@@ -315,21 +291,20 @@ class HttpArcGisClientSpec extends AnyFunSuite {
       val e = intercept[RuntimeException](
         graft.sources.arcgis.PortalAuth.fetcher(base, "alice", "wrong", "graft")())
       assert(e.getMessage.contains("Unable to generate token"), e.getMessage)
-    } finally server.stop(0)
+    } finally server.stop()
   }
 
   test("ARCGIS_PARAMS merge: extra params ride every query, user key overrides engine default") {
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[Map[String, String]]()
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
-    server.createContext("/xp", (ex: HttpExchange) => {
+    val server = new ArcGisLoopback
+    server.route("/xp", (ex: HttpExchange) => {
       val p = params(ex)
       if (ex.getRequestURI.getPath == "/xp/query") seen.add(p)
       reply(ex, """{"features":[]}""")
     })
-    server.start()
     try {
       val client = new HttpArcGisClient(
-        s"http://127.0.0.1:${server.getAddress.getPort}/xp",
+        s"${server.base}/xp",
         extraParams = Seq("gdbVersion" -> "SDE.v1", "outSR" -> "3857"))
       client.queryPage(0L, 10, "1=1", Seq("*"))
       val p = seen.toArray.head.asInstanceOf[Map[String, String]]
@@ -339,7 +314,7 @@ class HttpArcGisClientSpec extends AnyFunSuite {
       assert(p.get("outSR").contains("3857"))
       // engine params still present
       assert(p.get("where").contains("1=1") && p.get("resultOffset").contains("0"))
-    } finally server.stop(0)
+    } finally server.stop()
   }
 
   test("long reads switch verb to idempotent POST; short reads stay GET") {
@@ -349,8 +324,8 @@ class HttpArcGisClientSpec extends AnyFunSuite {
     // SAME params (token included) as a form-encoded POST instead — and keep
     // small requests on GET (cache/proxy friendly, matches the wire fixtures).
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Map[String, String])]()
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
-    server.createContext("/vp", (ex: HttpExchange) => {
+    val server = new ArcGisLoopback
+    server.route("/vp", (ex: HttpExchange) => {
       val method = ex.getRequestMethod
       val path = ex.getRequestURI.getPath
       val p = params(ex)
@@ -372,10 +347,9 @@ class HttpArcGisClientSpec extends AnyFunSuite {
         case _ => reply(ex, """{"error":{"code":400,"message":"unexpected"}}""")
       }
     })
-    server.start()
     try {
       val client = new HttpArcGisClient(
-        s"http://127.0.0.1:${server.getAddress.getPort}/vp",
+        s"${server.base}/vp",
         auth = Some(new AuthCache(() => ("tok-vp", Long.MaxValue))))
 
       // short read: stays GET
@@ -405,6 +379,82 @@ class HttpArcGisClientSpec extends AnyFunSuite {
       assert(m3 == "POST" && path3 == "/vp/query",
         s"long where-clause read must switch to POST, was $m3 $path3")
       assert(p3.get("where").contains(inList) && p3.get("resultOffset").contains("0"))
-    } finally server.stop(0)
+    } finally server.stop()
+  }
+
+  private def messages(t: Throwable): Seq[String] =
+    Option(t).toSeq.flatMap(e => Option(e.getMessage).toSeq ++ messages(e.getCause))
+
+  /** A 25-feature point layer (pages of 10) behind a counting token cache. */
+  private def envelopeLayer(server: ArcGisLoopback, name: String) = {
+    val layer = new ArcGisLoopback.PointLayer(server, name,
+      Seq("objectid" -> "esriFieldTypeOID", "name" -> "esriFieldTypeString"), 10)
+    layer.append((0 until 25).map(i =>
+      s"""{"attributes":{"objectid":$i,"name":"f-$i"},"geometry":{"x":$i,"y":${-i}}}"""))
+    var issued = 0
+    val auth = new AuthCache(
+      fetchToken = () => synchronized { issued += 1; (s"tok-$issued", Long.MaxValue) },
+      refreshMarginMs = 0, now = () => 0L)
+    val client = new HttpArcGisClient(layer.url, auth = Some(auth),
+      maxAttempts = 3, backoffMs = 1, sleep = _ => ())
+    (layer, client, () => synchronized(issued))
+  }
+
+  test("HTTP-200 token envelope mid-scan re-authenticates and retries: the scan stays exact") {
+    ArcGisLoopback.withServer { server =>
+      val (layer, client, issued) = envelopeLayer(server, "env-scan")
+      ArcGisClientRegistry.register("http-env-scan", client)
+      val df = spark.read.format("arcgis").option("client", "http-env-scan").load()
+        .select("objectid", "name")
+      // planning is done (layer info served); the next page request meets
+      // an expired token
+      layer.scriptError("query", 498, "Invalid token.")
+      val rows = df.collect().map(r => r.getLong(0) -> r.getString(1)).sortBy(_._1).toSeq
+      assert(rows == (0 until 25).map(i => i.toLong -> s"f-$i"))
+      assert(layer.requests("query") == 3 + 1, "3 pages plus the one retried page")
+      assert(issued() == 2, "the 498 must invalidate the token and fetch a new one")
+      assert(layer.tokens.contains("tok-2"), "the retried page carries the fresh token")
+    }
+  }
+
+  test("a persistent error envelope fails with the server's code and message on every endpoint") {
+    ArcGisLoopback.withServer { server =>
+      val (layer, client, _) = envelopeLayer(server, "env-fail")
+      ArcGisClientRegistry.register("http-env-fail", client)
+      val df = spark.read.format("arcgis").option("client", "http-env-fail").load()
+        .select("objectid")
+      layer.scriptError("query", 498, "Token expired.", times = 1000)
+      val scan = intercept[Exception](df.collect())
+      assert(messages(scan).exists(m => m.contains("498") && m.contains("Token expired.")),
+        messages(scan).mkString(" | "))
+
+      // a non-auth code is permanent: one request, no retry
+      layer.resetCounters()
+      layer.scriptError("metadata", 400, "Invalid URL")
+      val info = intercept[RuntimeException](client.layerInfo())
+      assert(info.getMessage.contains("code=400") && info.getMessage.contains("Invalid URL"))
+      assert(layer.requests("metadata") == 1)
+
+      layer.scriptError("query", 400, "Unable to perform query.", times = 1)
+      val stats = intercept[RuntimeException](
+        client.queryStatistics("1=1", Nil, Seq(StatSpec("count", "objectid", "n"))))
+      assert(stats.getMessage.contains("Unable to perform query."))
+    }
+  }
+
+  test("writes: a token envelope is retried (rejected before applying), other envelopes fail") {
+    ArcGisLoopback.withServer { server =>
+      val (layer, client, issued) = envelopeLayer(server, "env-write")
+      val feats = Seq(EsriFeature(Map("name" -> "new"), Some((1.0, 2.0))))
+      layer.scriptError("add", 498, "Invalid token.")
+      assert(client.addFeatures(feats) == Seq(Right(1L)))
+      assert(layer.requests("add") == 2 && issued() == 2)
+
+      // the server may have applied a 5xx-class edit: never re-sent
+      layer.scriptError("add", 500, "Unable to complete operation.")
+      val e = intercept[RuntimeException](client.addFeatures(feats))
+      assert(e.getMessage.contains("code=500") && e.getMessage.contains("Unable to complete operation."))
+      assert(layer.requests("add") == 3)
+    }
   }
 }
